@@ -304,7 +304,6 @@ def cmd_read(args) -> int:
                 exclude_columns=cfg.exclude_columns,
                 rollup=rollup if last else None,
                 partition_lineage=cfg.partition_lineage,
-                dedup_plan=cfg.dedup_plan,
                 auto_widen=cfg.auto_widen,
             )
             runs_sec.append(round(time.perf_counter() - r0, 3))
@@ -332,7 +331,6 @@ def cmd_read(args) -> int:
             exclude_columns=cfg.exclude_columns,
             rollup=rollup,
             partition_lineage=cfg.partition_lineage,
-            dedup_plan=cfg.dedup_plan,
             auto_widen=cfg.auto_widen,
         )
         run_stream(

